@@ -33,8 +33,7 @@ from pyspark.sql import functions as F
 KEY = ["root_label", "pred", "dir", "child_label"]
 
 
-def _labeled_edge_pairs(triples: DataFrame, labels_flat: DataFrame,
-                        broadcast_labels: bool = True) -> DataFrame:
+def _labeled_edge_pairs(triples: DataFrame, labels_flat: DataFrame) -> DataFrame:
     """triples ⋈ labels(subj) ⋈ labels(obj): one row per
     (edge, subject-label, object-label) combination, columns
     ``(subj, pred, obj, eid, sl, sl_pos, ol, ol_pos)``.
@@ -47,13 +46,11 @@ def _labeled_edge_pairs(triples: DataFrame, labels_flat: DataFrame,
     one group per contribution row (~|cand_edges| groups); at web scale that
     is the classic distinct-on-a-unique-column anti-pattern.
     """
-    lab = (
+    lab = F.broadcast(
         labels_flat.select("node", "label", "pos")
         .groupBy("node", "label")
         .agg(F.min("pos").alias("pos"))
     )
-    if broadcast_labels:
-        lab = F.broadcast(lab)
     lab_s = lab.select(
         F.col("node").alias("subj"), F.col("label").alias("sl"), F.col("pos").alias("sl_pos")
     )
@@ -71,8 +68,7 @@ def _first_seen_base():
     return ((F.col("eid") * 1024 + sl) * 1024 + ol).cast("long")
 
 
-def candidate_edges(triples: DataFrame, labels_flat: DataFrame,
-                    broadcast_labels: bool = True) -> DataFrame:
+def candidate_edges(triples: DataFrame, labels_flat: DataFrame) -> DataFrame:
     """Per-contribution rows for every candidate rule.
 
     :triples: ``(subj, pred, obj, eid)``
@@ -81,7 +77,7 @@ def candidate_edges(triples: DataFrame, labels_flat: DataFrame,
         child_node, ord)`` where ``ord`` is the packed first-seen sort key
         ``(eid, subj-label pos, obj-label pos, dir_rank)``.
     """
-    joined = _labeled_edge_pairs(triples, labels_flat, broadcast_labels)
+    joined = _labeled_edge_pairs(triples, labels_flat)
 
     def side(root_l, dirv, child_l, root_n, child_n):
         return F.struct(
@@ -136,8 +132,7 @@ def candidate_stats(cand_edges: DataFrame) -> DataFrame:
     )
 
 
-def candidate_rule_stats(triples: DataFrame, labels_flat: DataFrame,
-                         broadcast_labels: bool = True) -> DataFrame:
+def candidate_rule_stats(triples: DataFrame, labels_flat: DataFrame) -> DataFrame:
     """``candidate_stats(candidate_edges(...))`` computed WITHOUT
     materializing the per-direction contribution rows.
 
@@ -152,7 +147,7 @@ def candidate_rule_stats(triples: DataFrame, labels_flat: DataFrame,
     first_seen is exact: ord = base·2 + dir-bit (see ``candidate_edges``),
     so per direction min(ord) = 2·min(base) (+1 for 'in') over the same
     rows.  Same single shuffle on the rule key; identical output."""
-    joined = _labeled_edge_pairs(triples, labels_flat, broadcast_labels)
+    joined = _labeled_edge_pairs(triples, labels_flat)
     # first_seen needs a numeric eid to pack; with string eids (e.g. the
     # testdata natural-key eids) emit null instead of relying on Catalyst
     # pruning the cast away through the explode (ANSI mode would error)

@@ -13,6 +13,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half the machine's physical memory: the local-mode driver JVM is the
+    whole engine, but the Python side (workers, Arrow buffers, the test or
+    pipeline process itself) needs the rest."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, phys // 2 // 2**30)}g"
+
+
 def get_spark(app_name: str = "kgist_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None, extra_conf: dict | None = None) -> SparkSession:
     if cpus is None:
@@ -40,7 +48,8 @@ def get_spark(app_name: str = "kgist_spark", cpus: int | None = None,
             "spark.sql.adaptive.optimizer.excludedRules",
             "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation",
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
         # JDK17 defaults to G1, which is pathological for this workload's
         # allocation pattern (wide hash aggregations over short-lived string
         # rows): measured 6-80 s swings on an identical query at local[32].

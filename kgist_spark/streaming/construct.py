@@ -42,25 +42,23 @@ global minimum).
 100 TB shape: the dictionary is read once per batch and only its NEW rows
 are written; the anti-join against existing triples is an equi-join on the
 natural key (shuffle bounded by batch size on the probe side); all
-extraction and scoring is JVM-side.  Dictionary LSH band hashes are
-PERSISTED as an index (``canon_index``, batch-partitioned like the
-dictionary) with a per-bucket size side table (``canon_index_sizes``, a few
-rows per batch): per-batch linking joins the batch's band hashes against
-the index — the index is scanned but never shuffled or re-hashed, and
+extraction and scoring is JVM-side.  The dictionary state is TWO
+batch-partitioned tables: ``canon_dict`` ``(surface, canonical)`` and its
+persisted LSH index ``canon_index`` ``(surface, band, bucket)``, which must
+cover every dictionary batch (reads and compaction raise, naming the
+missing batches, when it does not).  Per-batch linking has ONE path: the
+batch's band hashes join the index — the index is scanned but never
+shuffled or re-hashed, hot buckets are sized by aggregating the index over
+ONLY the buckets the batch touches (semi-join on the batch side), and
 dictionary shingles are recomputed only for matched candidate surfaces.
-NO join in this module carries a FORCED broadcast hint on either side:
-the dictionary grows without bound with the corpus, and a "batch" can be
-a backfill of arbitrary size, so every join is left to AQE (broadcast
-while a side actually fits, shuffle join once it doesn't).  Per-batch
-linking work is the index scan plus O(batch + matches) shuffles; the
-exact-hit and anti-joins against the dictionary/KG are equi-joins whose
-shuffle AQE plans from runtime sizes.  Hot-bucket detection aggregates the
-narrow size side table ONLY over the buckets the batch touches (semi-join
-on the batch side), and the dictionary-size probe reads the lineage
-manifest on the driver — no per-batch re-hash or full-index aggregate;
-the residual per-batch term is the columnar scan of the sizes table
-(O(distinct index buckets) narrow rows — compact it with a periodic
-snapshot if it ever dominates).
+The dictionary size is read from the lineage manifest on the driver (no
+Spark job).  NO join in this module carries a FORCED broadcast hint on
+either side: the dictionary grows without bound with the corpus, and a
+"batch" can be a backfill of arbitrary size, so every join is left to AQE
+(broadcast while a side actually fits, shuffle join once it doesn't).
+Per-batch linking work is the index scan plus O(batch + matches) shuffles;
+the exact-hit and anti-joins against the dictionary/KG are equi-joins whose
+shuffle AQE plans from runtime sizes.
 """
 
 from __future__ import annotations
@@ -75,7 +73,6 @@ from kgist_spark.pipeline.canonicalize import (
     apply_canonical_triples,
     canonical_map,
     entity_vocabulary,
-    link_mentions,
 )
 from kgist_spark.pipeline.run import extract_facts_dedup
 from kgist_spark.pipeline.materialize import (
@@ -91,10 +88,8 @@ from kgist_spark.streaming.ingest import stream_pages
 
 DICT_DIR = "canon_dict"
 INDEX_DIR = "canon_index"
-SIZES_DIR = "canon_index_sizes"
 #: LSH family shared with canonical_map / link_mentions defaults — the
-#: index MUST use the same hashes so indexed and unindexed linking see the
-#: same candidate pairs
+#: index MUST use the same hashes so its links match link_mentions'
 _NUM_PERM, _BANDS, _ROWS_PER_BAND = 32, 8, 4
 #: target rows per dictionary/index append file — sizes the write width so a
 #: huge backfill batch fans out while the usual trickle stays a single file
@@ -110,36 +105,6 @@ def _surface_lsh(surfaces: DataFrame):
     return sh, MH.lsh_buckets(sigs, bands=_BANDS, rows_per_band=_ROWS_PER_BAND)
 
 
-def read_index(spark: SparkSession, out_dir: str,
-               exclude_batch: int | None = None) -> DataFrame | None:
-    """The persisted dictionary LSH index ``(surface, band, bucket)``, or
-    None if absent OR not covering every dictionary batch (a KG whose
-    early batches predate the index would otherwise link against an index
-    that is blind to the early surfaces — near-matches to them would
-    silently become NEW canonical groups, diverging from unindexed
-    linking).  Pre-/partial-index KGs fall back to unindexed linking."""
-    path = os.path.join(out_dir, INDEX_DIR)
-    dict_batches = _batch_ids(os.path.join(out_dir, DICT_DIR))
-    index_batches = _batch_ids(path)
-    if exclude_batch is not None:
-        dict_batches.discard(exclude_batch)
-        index_batches.discard(exclude_batch)
-    if not index_batches or not dict_batches <= index_batches:
-        return None
-    df = spark.read.option("basePath", path).parquet(
-        os.path.join(path, "batch=*")
-    )
-    if exclude_batch is not None:
-        df = df.where(F.col("batch") != exclude_batch)
-    return df.select("surface", "band", "bucket")
-
-
-def _has_batches(path: str) -> bool:
-    return os.path.isdir(path) and any(
-        e.startswith("batch=") for e in os.listdir(path)
-    )
-
-
 def _batch_ids(path: str) -> set:
     """Batch ids present on disk under ``path`` (``batch=<id>`` dirs)."""
     if not os.path.isdir(path):
@@ -151,69 +116,76 @@ def _batch_ids(path: str) -> set:
     }
 
 
-def read_index_sizes(spark: SparkSession, out_dir: str,
-                     exclude_batch: int | None = None) -> DataFrame | None:
-    """RAW per-batch bucket-size partials ``(band, bucket, n)`` from the
-    ``canon_index_sizes`` side table, or None when the side table does not
-    COVER the index — a KG whose early batches predate the table would
-    otherwise yield silently-partial sums (hot buckets under-counted, the
-    cap disabled on exactly the degenerate buckets it exists for).
-    Consumers confine their aggregation to the buckets a batch actually
-    touches (semi-join), so per-batch work is bounded by the narrow sizes
-    scan, not a full-index re-hash."""
-    path = os.path.join(out_dir, SIZES_DIR)
-    index_batches = _batch_ids(os.path.join(out_dir, INDEX_DIR))
-    sizes_batches = _batch_ids(path)
-    if exclude_batch is not None:
-        index_batches.discard(exclude_batch)
-        sizes_batches.discard(exclude_batch)
-    if not sizes_batches or not index_batches <= sizes_batches:
-        return None  # absent or partial coverage: caller sizes the index
+def _require_coverage(out_dir: str, table: str, have: set,
+                      exclude_batch: int | None = None) -> set:
+    """The dictionary batch ids on disk (minus ``exclude_batch``); raises
+    naming the ones ``table`` (which holds batches ``have``) lacks — a
+    dictionary batch missing from the LSH index would be invisible to
+    linking (near-matches to its surfaces silently become NEW canonical
+    groups), and one missing from the manifest would under-count the
+    dictionary."""
+    need = _batch_ids(os.path.join(out_dir, DICT_DIR)) - {exclude_batch}
+    missing = sorted(need - have)
+    if missing:
+        raise RuntimeError(
+            f"{table} at {out_dir} does not cover dictionary batch(es) "
+            f"{missing}"
+        )
+    return need
+
+
+def _read_batches(spark: SparkSession, path: str, exclude_batch: int | None,
+                  cols: list) -> DataFrame | None:
+    """``cols`` over the ``batch=<id>`` partitions under ``path`` minus
+    ``exclude_batch``, or None when none remain."""
+    if not _batch_ids(path) - {exclude_batch}:
+        return None
     df = spark.read.option("basePath", path).parquet(
         os.path.join(path, "batch=*")
     )
     if exclude_batch is not None:
         df = df.where(F.col("batch") != exclude_batch)
-    return df.select("band", "bucket", "n")
+    return df.select(*cols)
+
+
+def read_index(spark: SparkSession, out_dir: str,
+               exclude_batch: int | None = None) -> DataFrame | None:
+    """The persisted dictionary LSH index ``(surface, band, bucket)``, or
+    None before the first dictionary batch.  Raises when the index does not
+    cover every dictionary batch (see :func:`_require_coverage`)."""
+    path = os.path.join(out_dir, INDEX_DIR)
+    _require_coverage(out_dir, INDEX_DIR, _batch_ids(path), exclude_batch)
+    return _read_batches(spark, path, exclude_batch,
+                         ["surface", "band", "bucket"])
 
 
 def dict_size_from_manifest(out_dir: str,
-                            exclude_batch: int | None = None) -> int | None:
+                            exclude_batch: int | None = None) -> int:
     """Dictionary row count accumulated from the per-batch ``canon_dict``
-    manifest rows — O(#batches) driver-side, no Spark job.  None when the
-    manifest does not cover every dictionary batch on disk (pre-manifest
-    KGs); replayed batches overwrite, so the LAST row per batch wins."""
-    dict_batches = _batch_ids(os.path.join(out_dir, DICT_DIR))
-    if exclude_batch is not None:
-        dict_batches.discard(exclude_batch)
+    manifest rows — O(#batches) driver-side, no Spark job.  Replayed
+    batches overwrite, so the LAST row per batch wins; raises when the
+    manifest does not cover every dictionary batch on disk."""
     by_batch: dict = {}
     for e in read_manifest(out_dir):
-        if (e["table"] == "canon_dict" and e["status"] == "done"
-                and e.get("batch") != exclude_batch):
+        if e["table"] == DICT_DIR and e["status"] == "done":
             by_batch[e["batch"]] = e["n_rows"]
-    if not dict_batches <= set(by_batch):
-        return None
-    return sum(by_batch[b] for b in dict_batches)
+    need = _require_coverage(out_dir, "manifest", set(by_batch), exclude_batch)
+    return sum(by_batch[b] for b in need)
 
 
 def compact_dictionary_state(spark: SparkSession, out_dir: str,
                              keep_last: int = 1) -> dict:
     """Offline maintenance: merge all but the newest ``keep_last`` batch
-    partitions of the dictionary, its LSH index, and the size side table
-    into ONE partition each (kept under the LARGEST compacted batch id).
+    partitions of the dictionary and its LSH index into ONE partition each
+    (kept under the LARGEST compacted batch id).
 
-    Why: each micro-batch appends a partition to all three tables, so after
-    N batches every read opens N partitions and the sizes scan carries N
-    partial rows per recurring bucket.  Compaction restores O(1) partitions
-    and collapses size partials to one row per bucket — the periodic
-    snapshot the module doc prescribes for long-running streams.
+    Why: each micro-batch appends a partition to both tables, so after N
+    batches every read opens N partitions.  Compaction restores O(1)
+    partitions — the periodic snapshot for long-running streams.
 
-    Contracts preserved: readers see IDENTICAL content (sizes are summed,
-    dictionary/index rows unioned); every table is compacted over the SAME
-    batch set — a side table that does not COVER those batches (pre-sizes /
-    pre-index KGs) has its old partials DROPPED instead of merged, so it
-    stays visibly non-covering and the read guards keep falling back
-    correctly (never a fabricated partial merge that would pass coverage).
+    Contracts preserved: readers see IDENTICAL content (rows unioned); both
+    tables are compacted over the SAME batch set, and an index that does
+    not cover every dictionary batch raises before anything is written.
     Replay-exclusion survives because only the newest ``keep_last >= 1``
     batches are ever replayable (the stream checkpoint has long committed
     the compacted ones) and those keep their own partitions.
@@ -239,33 +211,29 @@ def compact_dictionary_state(spark: SparkSession, out_dir: str,
     plan_path = os.path.join(out_dir, "_compact_plan.json")
 
     def _finish(plan: dict) -> dict:
-        for sub, entry in plan["tables"].items():
+        target = plan["target"]
+        for sub, old in plan["tables"].items():
             path = os.path.join(out_dir, sub)
             ready = path + "._compact_ready"
-            if entry["mode"] == "merge" and not os.path.isdir(ready):
-                # this table's swap already completed on a previous attempt
-                # (os.replace consumed the staging dir): batch=<target> now
-                # HOLDS the merged data — remove only the other old
-                # partitions, never the target
-                for b in entry["old"]:
-                    if b != plan["target"]:
-                        shutil.rmtree(os.path.join(path, f"batch={b}"),
-                                      ignore_errors=True)
-                continue
-            for b in entry["old"]:
-                shutil.rmtree(os.path.join(path, f"batch={b}"),
-                              ignore_errors=True)
-            if entry["mode"] == "merge":
-                os.replace(ready, os.path.join(path, f"batch={plan['target']}"))
+            # a missing staging dir means this table's swap already
+            # completed on a previous attempt (os.replace consumed it):
+            # batch=<target> now HOLDS the merged data — never remove it
+            swapped = not os.path.isdir(ready)
+            for b in old:
+                if not (swapped and b == target):
+                    shutil.rmtree(os.path.join(path, f"batch={b}"),
+                                  ignore_errors=True)
+            if not swapped:
+                os.replace(ready, os.path.join(path, f"batch={target}"))
         if plan.get("dict_rows") is not None:
             # last row per batch wins, so a duplicate append on recovery is
             # harmless; coverage checks disk dirs, which are gone
             _append_manifest(out_dir, {
-                "table": "canon_dict", "batch": plan["target"],
+                "table": DICT_DIR, "batch": target,
                 "n_rows": plan["dict_rows"], "status": "done",
             })
         os.remove(plan_path)
-        return {"compacted": plan["n_old"], "into": plan["target"],
+        return {"compacted": plan["n_old"], "into": target,
                 "recovered": plan.get("recovered", False)}
 
     if os.path.exists(plan_path):
@@ -274,46 +242,38 @@ def compact_dictionary_state(spark: SparkSession, out_dir: str,
         plan["recovered"] = True
         return _finish(plan)
 
-    batches = sorted(_batch_ids(os.path.join(out_dir, DICT_DIR)))
+    batches = sorted(_require_coverage(
+        out_dir, INDEX_DIR, _batch_ids(os.path.join(out_dir, INDEX_DIR))))
     old = batches[:max(0, len(batches) - keep_last)]
     if len(old) <= 1:
         return {"compacted": 0, "into": None}
     target = old[-1]
 
-    # phase 1 — non-destructive: stage every merge, decide merge-vs-drop
+    # phase 1 — non-destructive: stage every merge
     plan = {"target": target, "n_old": len(old), "tables": {},
             "dict_rows": None}
-    for sub in (DICT_DIR, INDEX_DIR, SIZES_DIR):
+    for sub in (DICT_DIR, INDEX_DIR):
         path = os.path.join(out_dir, sub)
-        present = _batch_ids(path)
-        if not present & set(old):
-            continue
-        if not set(old) <= present:
-            # partial coverage (pre-sizes / pre-index KG): dropping the
-            # partials keeps the table visibly non-covering for the guards
-            plan["tables"][sub] = {"old": sorted(present & set(old)),
-                                   "mode": "drop"}
-            continue
-        df = (
-            spark.read.option("basePath", path)
-            .parquet(os.path.join(path, "batch=*"))
-            .where(F.col("batch").isin(list(old)))
-            .drop("batch")
-        )
-        if sub == SIZES_DIR:
-            df = df.groupBy("band", "bucket").agg(F.sum("n").alias("n"))
         ready = path + "._compact_ready"
         shutil.rmtree(ready, ignore_errors=True)
-        df.coalesce(max(1, len(old) // 8)).write.mode("overwrite").parquet(ready)
-        if sub == DICT_DIR:
-            # row count from the parquet footers of the files just written —
-            # no second Spark scan of the staged data
-            import pyarrow.parquet as pq
-            plan["dict_rows"] = sum(
-                pq.ParquetFile(os.path.join(ready, f)).metadata.num_rows
-                for f in os.listdir(ready) if f.endswith(".parquet")
-            )
-        plan["tables"][sub] = {"old": list(old), "mode": "merge"}
+        (
+            spark.read.option("basePath", path)
+            .parquet(os.path.join(path, "batch=*"))
+            .where(F.col("batch").isin(old))
+            .drop("batch")
+            .coalesce(max(1, len(old) // 8))
+            .write.mode("overwrite").parquet(ready)
+        )
+        plan["tables"][sub] = old
+    # dictionary row count from the parquet footers of the files just
+    # written — no second Spark scan of the staged data
+    import pyarrow.parquet as pq
+
+    ready = os.path.join(out_dir, DICT_DIR) + "._compact_ready"
+    plan["dict_rows"] = sum(
+        pq.ParquetFile(os.path.join(ready, f)).metadata.num_rows
+        for f in os.listdir(ready) if f.endswith(".parquet")
+    )
 
     # phase 2 — write-ahead plan (atomic: a crash mid-write must never
     # leave a truncated plan that bricks the next run), then the swap
@@ -329,7 +289,7 @@ def read_incremental_kg(spark: SparkSession, out_dir: str):
     lineage column.  ``(None, None)`` before the first non-empty batch."""
     t_path = os.path.join(out_dir, "kg_triples")
     l_path = os.path.join(out_dir, "kg_labels")
-    if not (_has_batches(t_path) and _has_batches(l_path)):
+    if not (_batch_ids(t_path) and _batch_ids(l_path)):
         return None, None
     triples = spark.read.option("basePath", t_path).parquet(
         os.path.join(t_path, "batch=*", "bucket=*")
@@ -345,22 +305,13 @@ def read_dictionary(spark: SparkSession, out_dir: str,
     """``(surface, canonical)`` over all batches, or None before batch 0.
     ``exclude_batch`` drops one batch's rows — the replay path must see the
     dictionary exactly as the original run did, not its own output."""
-    path = os.path.join(out_dir, DICT_DIR)
-    if not _has_batches(path):
-        return None
-    df = spark.read.option("basePath", path).parquet(
-        os.path.join(path, "batch=*")
-    )
-    if exclude_batch is not None:
-        df = df.where(F.col("batch") != exclude_batch)
-    return df.select("surface", "canonical")
+    return _read_batches(spark, os.path.join(out_dir, DICT_DIR), exclude_batch,
+                         ["surface", "canonical"])
 
 
-def _indexed_link(unknown: DataFrame, dict_index: DataFrame,
-                  threshold: float,
-                  dictionary: DataFrame | None = None,
-                  stats: dict | None = None,
-                  index_sizes: DataFrame | None = None) -> DataFrame:
+def _indexed_link(unknown: DataFrame, dictionary: DataFrame,
+                  dict_index: DataFrame, threshold: float,
+                  stats: dict | None = None) -> DataFrame:
     """``(mention, linked)`` best dictionary match per unknown surface via
     the persisted index: the (band, bucket) equi-join never shuffles or
     re-hashes the index (AQE broadcasts the tiny batch side), and
@@ -369,37 +320,30 @@ def _indexed_link(unknown: DataFrame, dict_index: DataFrame,
     (``substring_index(id, ':', 1)``), mirroring ``canonical_map`` — a new
     surface never adopts a different-etype group's canonical.
 
-    Dict-side hot buckets (> 64 ids) are dropped with a logged count, sized
-    from the ``index_sizes`` side table when given — O(touched buckets),
-    not O(dictionary); the full-index group-by is only the fallback for
-    pre-sizes KGs.  (The unindexed path caps on combined mention+dictionary
-    bucket size instead; identical on non-degenerate data.)
+    Dict-side hot buckets (> 64 ids) are dropped with a logged count,
+    sized by aggregating the index over only the buckets the batch touches.
+    (:func:`link_mentions`, the reference for these links, caps on combined
+    mention+dictionary bucket size instead; identical on non-degenerate
+    data.)
 
-    With ``dictionary`` and a ``stats`` dict, records
-    ``stats["n_bridges"]``: the number of batch surfaces whose verified
-    matches span MORE THAN ONE existing canonical group — exactly the
-    cases where the grow-only contract diverges from a batch rebuild
-    (the bridge links to its best-scoring group; the groups are not
-    merged).  A climbing bridge count is the operational signal to
-    schedule a periodic batch rebuild."""
+    With a ``stats`` dict, records ``stats["n_bridges"]``: the number of
+    batch surfaces whose verified matches span MORE THAN ONE existing
+    canonical group — exactly the cases where the grow-only contract
+    diverges from a batch rebuild (the bridge links to its best-scoring
+    group; the groups are not merged).  A climbing bridge count is the
+    operational signal to schedule a periodic batch rebuild."""
     import logging
 
     m_sh, m_buckets = _surface_lsh(unknown.select(F.col("node").alias("surface")))
     # hot detection is confined to the buckets THIS batch touches (semi-
-    # join on the tiny batch side): with the sizes side table the work is
-    # one narrow columnar scan + an aggregate over touched buckets only;
-    # the full-index group-by is just the fallback for pre-sizes KGs
+    # join on the tiny batch side): one index scan + an aggregate over the
+    # touched buckets only
     touched = m_buckets.select("band", "bucket").distinct()
-    partials = (
-        index_sizes
-        if index_sizes is not None
-        else dict_index.select("band", "bucket", F.lit(1).alias("n"))
-    )
     hot = (
-        partials.join(touched, ["band", "bucket"], "leftsemi")
+        dict_index.join(touched, ["band", "bucket"], "leftsemi")
         .groupBy("band", "bucket")
-        .agg(F.sum("n").alias("n"))
-        .where(F.col("n") > 64)
+        .count()
+        .where(F.col("count") > 64)
     )
     n_hot = hot.count()
     if n_hot:
@@ -429,7 +373,7 @@ def _indexed_link(unknown: DataFrame, dict_index: DataFrame,
         m_sh.unionByName(d_sh),
         threshold,
     )
-    if dictionary is not None and stats is not None:
+    if stats is not None:
         # no broadcast hint: 'scored' is bounded by the BATCH, but a
         # backfill-scale batch is exactly when a forced broadcast breaks —
         # AQE broadcasts it while it actually fits
@@ -465,11 +409,9 @@ def _indexed_link(unknown: DataFrame, dict_index: DataFrame,
 
 
 def link_entities_to_dictionary(entities: DataFrame, dictionary: DataFrame | None,
+                                dict_index: DataFrame | None, dict_size: int,
                                 threshold: float = 0.70,
-                                dict_index: DataFrame | None = None,
-                                stats: dict | None = None,
-                                index_sizes: DataFrame | None = None,
-                                dict_size: int | None = None) -> DataFrame:
+                                stats: dict | None = None) -> DataFrame:
     """``(node, canonical, is_new)`` for every batch entity.
 
     Exact dictionary hits keep their canonical; near-matches (trigram
@@ -481,22 +423,20 @@ def link_entities_to_dictionary(entities: DataFrame, dictionary: DataFrame | Non
 
     The dictionary side carries NO broadcast hint anywhere — it grows
     without bound, so forcing a broadcast would cap the module at the
-    broadcast size limit.  The known-small sides (the per-batch ``best``
-    link table) are hinted; the exact-hit join and the anti-join are left
-    to AQE, which broadcasts the dictionary only while it actually fits
-    and shuffle-joins once it doesn't.
+    broadcast size limit.  The exact-hit join, the anti-join and the link
+    join are left to AQE, which broadcasts a side only while it actually
+    fits and shuffle-joins once it doesn't.
 
-    With ``dict_index`` (the persisted ``(surface, band, bucket)`` LSH
-    index), candidate pairs come from joining the BATCH's band hashes
-    against the index — per-batch shuffle work is O(batch + matches), and
-    dictionary shingles are recomputed only for the matched candidate
-    surfaces (semi-join-bounded).  The index uses the same hash family as
-    the unindexed path, so both produce identical links.  Hot index
-    buckets past ``max_bucket=64`` ids are dropped with a logged count,
-    sized from ``index_sizes`` when given (no O(dictionary) aggregate),
-    mirroring :func:`operators.minhash.candidate_pairs`.  ``dict_size``
-    (from the manifest / size side table) skips the per-batch
-    ``dictionary.count()`` job.
+    Near-match candidates come from joining the BATCH's band hashes against
+    ``dict_index`` (the persisted ``(surface, band, bucket)`` LSH index of
+    every dictionary surface, required whenever ``dictionary`` is given) —
+    per-batch shuffle work is O(batch + matches), and dictionary shingles
+    are recomputed only for the matched candidate surfaces.  The index uses
+    :func:`link_mentions`' hash family, so both produce identical links.
+    Hot index buckets past ``max_bucket=64`` ids are dropped with a logged
+    count, mirroring :func:`operators.minhash.candidate_pairs`.
+    ``dict_size`` is the dictionary's row count (from the manifest, see
+    :func:`dict_size_from_manifest`); it sizes the linking shuffle width.
     """
     if dictionary is None:
         return canonical_map(entities, threshold=threshold).withColumn(
@@ -512,12 +452,9 @@ def link_entities_to_dictionary(entities: DataFrame, dictionary: DataFrame | Non
     ).localCheckpoint()
     # the linking LSH chain gets the same size-aware shuffle width as
     # canonical_map: per-batch linking over a small dictionary is stage-
-    # scheduling latency at the session width (the counts are cheap —
-    # unknown is checkpointed, and the dictionary size comes from the size
-    # side table when available instead of a per-batch count job)
+    # scheduling latency at the session width (the count is cheap —
+    # unknown is checkpointed)
     spark = entities.sparkSession
-    if dict_size is None:
-        dict_size = dictionary.count()
     n_small = unknown.count() + dict_size
     old_width = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
@@ -525,21 +462,10 @@ def link_entities_to_dictionary(entities: DataFrame, dictionary: DataFrame | Non
         str(max(1, min(int(old_width), n_small // 50_000))),
     )
     try:
-        if dict_index is not None:
-            best = _indexed_link(unknown, dict_index, threshold,
-                                 dictionary=dictionary, stats=stats,
-                                 index_sizes=index_sizes)
-        else:
-            best = link_mentions(
-                unknown.select(F.col("node").alias("mention")),
-                dictionary.select(F.col("surface").alias("entity")),
-                threshold=threshold,
-                same_prefix=True,
-            )
         linked = (
             # batch-side table, but batches can be backfill-scale: no forced
             # broadcast (AQE picks broadcast while it fits)
-            best
+            _indexed_link(unknown, d, dict_index, threshold, stats=stats)
             .join(d.withColumnRenamed("surface", "linked"), "linked")
             .select(
                 F.col("mention").alias("node"), "canonical",
@@ -568,8 +494,10 @@ def construct_batch_incremental(spark: SparkSession, pages: DataFrame,
         for e in read_manifest(out_dir)
         if e["status"] == "done"
     }
+    # the canon_dict row is appended LAST: a crash before it must replay
+    # the batch, or the manifest would stop covering the dictionary
     if {("kg_triples", batch_id), ("kg_labels", batch_id),
-            ("kg_adjacency", batch_id)} <= done:
+            ("kg_adjacency", batch_id), (DICT_DIR, batch_id)} <= done:
         return {"batch": batch_id, "skipped": True}
 
     # every persist is registered here and released in the finally block —
@@ -598,20 +526,14 @@ def construct_batch_incremental(spark: SparkSession, pages: DataFrame,
         # for good
         dictionary = read_dictionary(spark, out_dir, exclude_batch=batch_id)
         dict_index = read_index(spark, out_dir, exclude_batch=batch_id)
-        index_sizes = read_index_sizes(spark, out_dir, exclude_batch=batch_id)
         # dictionary size from the manifest's canon_dict rows — O(#batches)
-        # on the driver, NO Spark job; falls back to a one-off sum over the
-        # sizes partials for KGs whose manifests predate the rows
+        # on the driver, NO Spark job
         dict_size = dict_size_from_manifest(out_dir, exclude_batch=batch_id)
-        if dict_size is None and index_sizes is not None:
-            total = index_sizes.agg(F.sum("n").alias("t")).collect()[0]["t"]
-            dict_size = int(total or 0) // _BANDS
         link_stats: dict = {}
         canon = _persist(
             link_entities_to_dictionary(
-                entity_vocabulary(raw_triples), dictionary, threshold=threshold,
-                dict_index=dict_index, stats=link_stats,
-                index_sizes=index_sizes, dict_size=dict_size,
+                entity_vocabulary(raw_triples), dictionary, dict_index,
+                dict_size, threshold=threshold, stats=link_stats,
             )
         )
 
@@ -678,29 +600,18 @@ def construct_batch_incremental(spark: SparkSession, pages: DataFrame,
             .parquet(os.path.join(out_dir, DICT_DIR))
         # extend the LSH index with the batch's new surfaces (same family),
         # so the NEXT batch's linking joins against it instead of re-hashing
-        # the whole dictionary; the per-bucket size partials ride along so
-        # later batches can size hot buckets (and the dictionary) without
-        # scanning the index
+        # the whole dictionary
         _, new_buckets = _surface_lsh(
             canon.where("is_new").select(F.col("node").alias("surface"))
         )
-        new_buckets = _persist(
-            new_buckets.select(F.col("id").alias("surface"), "band", "bucket")
-        )
         index_width = max(1, n_new_surfaces * _BANDS // _DICT_ROWS_PER_FILE + 1)
-        new_buckets.withColumn("batch", F.lit(batch_id)) \
-            .repartition(index_width) \
-            .write.mode("overwrite") \
-            .option("partitionOverwriteMode", "dynamic") \
-            .partitionBy("batch") \
-            .parquet(os.path.join(out_dir, INDEX_DIR))
-        new_buckets.groupBy("band", "bucket").agg(F.count("*").alias("n")) \
+        new_buckets.select(F.col("id").alias("surface"), "band", "bucket") \
             .withColumn("batch", F.lit(batch_id)) \
             .repartition(index_width) \
             .write.mode("overwrite") \
             .option("partitionOverwriteMode", "dynamic") \
             .partitionBy("batch") \
-            .parquet(os.path.join(out_dir, SIZES_DIR))
+            .parquet(os.path.join(out_dir, INDEX_DIR))
 
         for name in outputs:
             for b in range(n_buckets):
@@ -711,7 +622,7 @@ def construct_batch_incremental(spark: SparkSession, pages: DataFrame,
         # dictionary lineage: lets later batches derive the dictionary size
         # from the manifest alone (dict_size_from_manifest) — no Spark job
         _append_manifest(out_dir, {
-            "table": "canon_dict", "batch": batch_id,
+            "table": DICT_DIR, "batch": batch_id,
             "n_rows": n_new_surfaces, "status": "done",
         })
         n_new = sum(counts["kg_triples"].values())

@@ -48,8 +48,8 @@ def main(argv=None, spark=None):
     ap.add_argument("--checkpoint", default=None,
                     help="stream checkpoint dir (default <out>/_checkpoint)")
     ap.add_argument("--compact", action="store_true",
-                    help="offline maintenance: merge old dictionary/index/"
-                         "size batch partitions at --out into one partition "
+                    help="offline maintenance: merge old dictionary/index "
+                         "batch partitions at --out into one partition "
                          "each, then exit (run while the stream is stopped)")
     args = ap.parse_args(argv)
     if args.compact and (args.input is not None or args.generate is not None

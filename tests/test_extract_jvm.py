@@ -104,17 +104,3 @@ def test_jvm_plan_has_no_python_stage(spark):
     for marker in ("BatchEvalPython", "ArrowEvalPython", "FlatMapsInPandas",
                    "MapInPandas", "PythonMapInArrow"):
         assert marker not in plan, marker
-
-
-@pytest.mark.spark
-def test_pipeline_uses_jvm_extractor_by_default(spark, tmp_path):
-    """construct_kg(engine default) equals construct_kg(extract_engine='python')."""
-    from kgist_spark.pipeline.run import construct_kg
-    from kgist_spark.sources.webpages import World, generate_pages
-
-    pages = generate_pages(spark, 500, seed=3, world=World(3)).cache()
-    tj, lj = construct_kg(spark, pages, out_dir=None)
-    tp, lp = construct_kg(spark, pages, out_dir=None, extract_engine="python")
-    pd.testing.assert_frame_equal(_sorted(tj), _sorted(tp))
-    pd.testing.assert_frame_equal(_sorted(lj), _sorted(lp))
-    pages.unpersist()

@@ -416,13 +416,16 @@ def test_incremental_matches_batch_on_alias_corpus(spark, tmp_path):
 
 
 def test_indexed_linking_matches_unindexed(spark, tmp_path):
-    """The persisted LSH index path and the unindexed link_mentions path
-    produce the same links (same hash family -> same candidates), the
-    index covers every dictionary surface, and the alias flow works
-    through the index across 3 batches."""
+    """Linking through the persisted LSH index produces the same links as
+    the unindexed link_mentions operator (same hash family -> same
+    candidates), the index covers every dictionary surface, and the alias
+    flow works through the index across 3 batches."""
+    from kgist_spark.pipeline.canonicalize import entity_vocabulary, link_mentions
+    from kgist_spark.pipeline.extract_jvm import extract_facts_jvm
     from kgist_spark.sources.webpages import World, generate_pages
     from kgist_spark.streaming.construct import (
         construct_batch_incremental,
+        dict_size_from_manifest,
         link_entities_to_dictionary,
         read_dictionary,
         read_index,
@@ -432,37 +435,45 @@ def test_indexed_linking_matches_unindexed(spark, tmp_path):
     world = World(42, alias_rate=0.5)
     pages = generate_pages(spark, 1200, seed=42, world=world).cache()
     docnum = F.regexp_extract("url", r"page/(\d+)$", 1).cast("int")
-    for i, (lo, hi) in enumerate([(0, 400), (400, 800), (800, 1200)]):
+    construct_batch_incremental(
+        spark, pages.where(docnum < 400), out, batch_id=0, n_buckets=2)
+
+    # link the later pages against the state batch 0 left behind
+    d = read_dictionary(spark, out)
+    raw = (
+        extract_facts_jvm(pages.where(docnum >= 400)).where("kind = 't'")
+        .groupBy("subj", "pred", "obj").agg(F.min("url").alias("url"))
+    )
+    ents = entity_vocabulary(raw)
+    got = link_entities_to_dictionary(
+        ents, d, read_index(spark, out), dict_size_from_manifest(out)
+    )
+    known = {r["surface"]: r["canonical"] for r in d.collect()}
+    # near-match links: new surfaces that adopted an existing canonical
+    # (intra-batch groups are rooted at a new surface, never a known one)
+    indexed = {
+        (r["node"], r["canonical"]) for r in got.collect()
+        if r["node"] not in known and r["canonical"] in known.values()
+    }
+    unknown = ents.join(d.select(F.col("surface").alias("node")), "node", "left_anti")
+    reference = {
+        (r["mention"], known[r["linked"]])
+        for r in link_mentions(
+            unknown.select(F.col("node").alias("mention")),
+            d.select(F.col("surface").alias("entity")),
+            threshold=0.70, same_prefix=True,
+        ).collect()
+    }
+    assert indexed == reference and indexed
+
+    for i, (lo, hi) in enumerate([(400, 800), (800, 1200)], start=1):
         construct_batch_incremental(
             spark, pages.where((docnum >= lo) & (docnum < hi)), out,
             batch_id=i, n_buckets=2,
         )
-
-    d = read_dictionary(spark, out)
-    idx = read_index(spark, out)
     # index covers exactly the dictionary's surfaces
-    assert {r["surface"] for r in idx.select("surface").distinct().collect()} \
-        == {r["surface"] for r in d.select("surface").collect()}
-
-    # a fresh batch linked with and without the index gives identical maps
-    last = pages.where(docnum >= 800)
-    from kgist_spark.pipeline.extract_jvm import extract_facts_jvm
-    from kgist_spark.pipeline.canonicalize import entity_vocabulary
-
-    raw = (
-        extract_facts_jvm(last).where("kind = 't'")
-        .groupBy("subj", "pred", "obj").agg(F.min("url").alias("url"))
-    )
-    ents = entity_vocabulary(raw)
-    with_idx = {
-        (r["node"], r["canonical"])
-        for r in link_entities_to_dictionary(ents, d, dict_index=idx).collect()
-    }
-    without = {
-        (r["node"], r["canonical"])
-        for r in link_entities_to_dictionary(ents, d, dict_index=None).collect()
-    }
-    assert with_idx == without and with_idx
+    assert {r["surface"] for r in read_index(spark, out).select("surface").distinct().collect()} \
+        == {r["surface"] for r in read_dictionary(spark, out).select("surface").collect()}
     pages.unpersist()
 
 
@@ -601,69 +612,87 @@ def test_bridge_detection_and_grow_only_linking(spark, tmp_path):
     assert groups1[idc] == groups0[ida]
 
 
-def test_sizes_and_manifest_coverage_guards(spark, tmp_path):
-    """Partial side tables must be REFUSED, not silently summed: a KG whose
-    early batches predate canon_index_sizes / the canon_dict manifest rows
-    falls back to full-index sizing rather than under-counting hot buckets
-    or under-estimating the dictionary."""
+def test_index_and_manifest_coverage_guards(spark, tmp_path):
+    """The manifest-driven dictionary size is exact, also after a crash
+    between a fold's KG-table manifest rows and its canon_dict row (the
+    batch must replay, not be skipped), and state that does not cover
+    every dictionary batch is REFUSED with an error naming the missing
+    batches: an index partition missing stops the next fold and
+    compaction, canon_dict manifest rows missing stop the size probe."""
     import json
     import shutil
 
+    from kgist_spark.pipeline.materialize import read_manifest
     from kgist_spark.streaming.construct import (
-        SIZES_DIR,
+        INDEX_DIR,
+        compact_dictionary_state,
         construct_batch_incremental,
         dict_size_from_manifest,
         read_dictionary,
-        read_index_sizes,
+        read_index,
     )
 
     world = World(42)
     out = str(tmp_path / "kg")
+    mpath = f"{out}/_manifest.json"
+    b1 = generate_pages(spark, 90, seed=2, world=world)
     construct_batch_incremental(
         spark, generate_pages(spark, 120, seed=1, world=world), out, 0, n_buckets=2)
-    construct_batch_incremental(
-        spark, generate_pages(spark, 90, seed=2, world=world), out, 1, n_buckets=2)
+    construct_batch_incremental(spark, b1, out, 1, n_buckets=2)
 
-    sizes = read_index_sizes(spark, out)
-    assert sizes is not None
+    # crash window: batch 1's canon_dict row never made it to the manifest
+    entries = [e for e in read_manifest(out)
+               if (e["table"], e.get("batch")) != ("canon_dict", 1)]
+    with open(mpath, "w") as f:
+        f.writelines(json.dumps(e) + "\n" for e in entries)
+    with pytest.raises(RuntimeError, match=r"dictionary batch\(es\) \[1\]"):
+        dict_size_from_manifest(out)
+    assert not construct_batch_incremental(spark, b1, out, 1, n_buckets=2)["skipped"]
+    assert ("canon_dict", 1) in {(e["table"], e.get("batch")) for e in read_manifest(out)}
+
     # manifest-driven dictionary size equals the real dictionary row count
     assert dict_size_from_manifest(out) == read_dictionary(spark, out).count()
     # excluding a replayed batch stays covered and consistent
     assert dict_size_from_manifest(out, exclude_batch=1) == \
         read_dictionary(spark, out, exclude_batch=1).count()
 
-    # simulate a pre-sizes KG: batch 0's sizes partition is missing
-    shutil.rmtree(f"{out}/{SIZES_DIR}/batch=0")
-    assert read_index_sizes(spark, out) is None          # partial -> refuse
-    # ...but excluding batch 0 restores full coverage of what remains
-    assert read_index_sizes(spark, out, exclude_batch=0) is not None
+    # batch 0's index partition is missing: linking would be blind to its
+    # surfaces, so the next fold and compaction both refuse
+    shutil.rmtree(f"{out}/{INDEX_DIR}/batch=0")
+    missing0 = r"dictionary batch\(es\) \[0\]"
+    with pytest.raises(RuntimeError, match=missing0):
+        construct_batch_incremental(
+            spark, generate_pages(spark, 60, seed=3, world=world), out, 2,
+            n_buckets=2)
+    with pytest.raises(RuntimeError, match=missing0):
+        compact_dictionary_state(spark, out, keep_last=1)
+    # ...but excluding batch 0 (its replay) sees a covered index
+    assert read_index(spark, out, exclude_batch=0) is not None
 
-    # pre-manifest KG: strip the canon_dict rows -> size probe refuses
-    mpath = f"{out}/_manifest.json"
+    # canon_dict manifest rows missing: the size probe refuses
     entries = [json.loads(l) for l in open(mpath) if l.strip()]
     with open(mpath, "w") as f:
         for e in entries:
             if e["table"] != "canon_dict":
                 f.write(json.dumps(e) + "\n")
-    assert dict_size_from_manifest(out) is None
+    with pytest.raises(RuntimeError, match=r"dictionary batch\(es\) \[0, 1\]"):
+        dict_size_from_manifest(out)
 
 
 def test_compact_dictionary_state_preserves_content_and_linking(spark, tmp_path):
-    """Compaction merges old dict/index/sizes partitions into one partition
+    """Compaction merges old dict/index partitions into one partition
     each with IDENTICAL reader-visible content, the manifest size probe
     stays exact, and the next batch links identically to an uncompacted
     twin KG."""
     from kgist_spark.streaming.construct import (
         DICT_DIR,
         INDEX_DIR,
-        SIZES_DIR,
         _batch_ids,
         compact_dictionary_state,
         construct_batch_incremental,
         dict_size_from_manifest,
         read_dictionary,
         read_index,
-        read_index_sizes,
     )
 
     world = World(42)
@@ -680,17 +709,12 @@ def test_compact_dictionary_state_preserves_content_and_linking(spark, tmp_path)
                    for r in read_dictionary(spark, out).collect())
         ix = sorted((r["surface"], r["band"], r["bucket"])
                     for r in read_index(spark, out).collect())
-        sz = sorted(
-            (r["band"], r["bucket"], r["n"])
-            for r in read_index_sizes(spark, out)
-            .groupBy("band", "bucket").agg(F.sum("n").alias("n")).collect()
-        )
-        return d, ix, sz
+        return d, ix
 
     before = snapshot(out_a)
     res = compact_dictionary_state(spark, out_a, keep_last=1)
     assert res["compacted"] == 2 and res["into"] == 1
-    for sub in (DICT_DIR, INDEX_DIR, SIZES_DIR):
+    for sub in (DICT_DIR, INDEX_DIR):
         assert _batch_ids(f"{out_a}/{sub}") == {1, 2}, sub
     assert snapshot(out_a) == before
     assert dict_size_from_manifest(out_a) == len(before[0])
@@ -704,27 +728,23 @@ def test_compact_dictionary_state_preserves_content_and_linking(spark, tmp_path)
     assert da == db
 
 
-def test_compaction_crash_recovery_and_partial_coverage(spark, tmp_path):
+def test_compaction_crash_recovery(spark, tmp_path):
     """(a) keep_last=0 is rejected (the newest batch is still replayable);
-    (b) a crash AFTER the write-ahead plan is finished idempotently by the
-    next call with identical final state; (c) a side table that does not
-    cover the compacted batches has its partials DROPPED, keeping the read
-    guards correctly falling back (never a fabricated partial merge)."""
+    (b) the dictionary and index are merged over the SAME batch set;
+    (c) a crash AFTER the write-ahead plan is finished idempotently by the
+    next call with identical final state."""
     import json
     import os
-    import shutil
 
     from kgist_spark.streaming.construct import (
         DICT_DIR,
         INDEX_DIR,
-        SIZES_DIR,
         _batch_ids,
         compact_dictionary_state,
         construct_batch_incremental,
         dict_size_from_manifest,
         read_dictionary,
         read_index,
-        read_index_sizes,
     )
 
     world = World(42)
@@ -737,23 +757,14 @@ def test_compaction_crash_recovery_and_partial_coverage(spark, tmp_path):
     with pytest.raises(ValueError, match="keep_last"):
         compact_dictionary_state(spark, out, keep_last=0)
 
-    # simulate a pre-sizes KG: batch 0's sizes partition never existed
-    shutil.rmtree(f"{out}/{SIZES_DIR}/batch=0")
-    assert read_index_sizes(spark, out) is None
     dict_before = sorted(
         (r["surface"], r["canonical"]) for r in read_dictionary(spark, out).collect()
     )
-
-    # simulate a crash right after the write-ahead plan: run once to get a
-    # real plan file, then restore the pre-destructive state and re-finish
     res = compact_dictionary_state(spark, out, keep_last=1)
     assert res["compacted"] == 2 and res["into"] == 1
-    # sizes partials were DROPPED (partial coverage), not merged: the table
-    # keeps failing the coverage guard instead of faking it
-    assert read_index_sizes(spark, out) is None
-    assert _batch_ids(f"{out}/{SIZES_DIR}") == {2}
     # dictionary/index merged over the SAME batch set and stay covered
-    assert _batch_ids(os.path.join(out, DICT_DIR)) == {1, 2}
+    for sub in (DICT_DIR, INDEX_DIR):
+        assert _batch_ids(os.path.join(out, sub)) == {1, 2}, sub
     assert read_index(spark, out) is not None
     assert sorted((r["surface"], r["canonical"])
                   for r in read_dictionary(spark, out).collect()) == dict_before
@@ -784,14 +795,12 @@ def test_compaction_mid_swap_crash_is_idempotent(spark, tmp_path, monkeypatch):
     from kgist_spark.streaming.construct import (
         DICT_DIR,
         INDEX_DIR,
-        SIZES_DIR,
         _batch_ids,
         compact_dictionary_state,
         construct_batch_incremental,
         dict_size_from_manifest,
         read_dictionary,
         read_index,
-        read_index_sizes,
     )
 
     world = World(7)
@@ -807,14 +816,11 @@ def test_compaction_mid_swap_crash_is_idempotent(spark, tmp_path, monkeypatch):
     dict_before = sorted(
         (r["surface"], r["canonical"]) for r in read_dictionary(spark, out).collect()
     )
-    # read_index_sizes returns RAW per-batch partials; content equality
-    # is over the per-bucket SUM (what every consumer computes)
-    def summed_sizes():
-        agg = (read_index_sizes(spark, out)
-               .groupBy("band", "bucket").agg(F.sum("n").alias("n")))
-        return sorted((r["band"], r["bucket"], r["n"]) for r in agg.collect())
+    def index_rows():
+        return sorted((r["surface"], r["band"], r["bucket"])
+                      for r in read_index(spark, out).collect())
 
-    sizes_before = summed_sizes()
+    index_before = index_rows()
 
     # crash injection: the index table's swap dies mid-flight (the plan and
     # the dictionary swap have already happened)
@@ -839,12 +845,11 @@ def test_compaction_mid_swap_crash_is_idempotent(spark, tmp_path, monkeypatch):
     res = compact_dictionary_state(spark, out, keep_last=1)
     assert res["recovered"] is True and res["into"] == 1
     assert not _os.path.exists(f"{out}/_compact_plan.json")
-    for sub in (DICT_DIR, INDEX_DIR, SIZES_DIR):
+    for sub in (DICT_DIR, INDEX_DIR):
         assert _batch_ids(f"{out}/{sub}") == {1, 2}, sub
     assert sorted((r["surface"], r["canonical"])
                   for r in read_dictionary(spark, out).collect()) == dict_before
-    assert read_index(spark, out) is not None
-    assert summed_sizes() == sizes_before
+    assert index_rows() == index_before
     assert dict_size_from_manifest(out) == len(dict_before)
 
 
